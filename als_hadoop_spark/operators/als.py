@@ -7,7 +7,7 @@ vectors → transpose → per-item means → M₀ init → 10 × (solve U | solv
 M) with the fixed factor broadcast via DistributedCache → probe scoring
 → RMSE. Here the whole thing is one driver program:
 
-    ratings → randomSplit → ml.recommendation.ALS(...).fit → transform
+    ratings → hash split → ml.recommendation.ALS(...).fit → transform
             → RegressionEvaluator-style RMSE aggregate
 
 with identical hyperparameters (rank=20, maxIter=10, regParam=0.065 —
@@ -92,6 +92,30 @@ def synth_ratings(
     )
 
 
+#: fraction of ratings in the training set (ALS-Hadoop/split.py:5-19)
+TRAIN_FRACTION = 0.8
+#: seed mixed into the split hash (the reference's split seed)
+SPLIT_SEED = 1
+
+
+def hash_split(ratings: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The 0.8/0.2 train/probe split of split.py:5-19, decided per
+    (user, item) cell by content hash rather than an RNG draw — the
+    layout-independent rule of ``q_hash_split``. ``randomSplit`` draws
+    per partition, so over a frame whose partitioning adaptive
+    execution decides at run time (any join, e.g. the dense-id encode)
+    its two evaluations need not be complementary and probe rows leak
+    into training; a hash predicate assigns every row identically on
+    every evaluation, so the two sets are disjoint and cover the
+    input."""
+    train = _hash_unit("user_id", "item_id", F.lit(SPLIT_SEED)) < TRAIN_FRACTION
+    return ratings.filter(train), ratings.filter(~train)
+
+
+def _rmse(err: F.Column) -> F.Column:
+    return F.sqrt(F.avg(F.pow(err, F.lit(2))))
+
+
 def als_pipeline(
     ratings: DataFrame,
     rank: int = RANK,
@@ -101,29 +125,32 @@ def als_pipeline(
 ) -> tuple[DataFrame, float, float, "object"]:
     """§3.1 end-to-end: split → fit → score → RMSE.
 
-    Returns (predictions, rmse, global_mean_rmse, fitted_model). The split mirrors
-    split.py:5-19 (per-row Bernoulli 0.8/0.2, seed 1); cold-start rows
-    are dropped exactly like the reference's join-miss drop at
-    ALS/ALS.java:460-464.
+    Returns (predictions, rmse, global_mean_rmse, fitted_model). The
+    split is :func:`hash_split` (0.8/0.2 per rating, like split.py:5-19,
+    but repeatable); cold-start rows get no prediction and are dropped
+    exactly like the reference's join-miss drop at ALS/ALS.java:460-464,
+    while the global-mean baseline scores every probe row.
     """
     from pyspark.ml.recommendation import ALS
 
-    train, probe = ratings.randomSplit([0.8, 0.2], seed=1)
-    # MLlib iterates over train 2×maxIter times — cache for the fit,
-    # release right after (the reference instead re-reads HDFS
-    # SequenceFiles every iteration, ALS/ALS.java:312-327).
-    train = train.cache()
+    # ONE scan of the input serves the split, the training-set
+    # statistics, the fit and the probe scoring (the reference instead
+    # re-reads HDFS SequenceFiles every iteration, ALS/ALS.java:312-327);
+    # released once both RMSEs are in — unless the caller cached it.
+    owned = not ratings.is_cached
+    rated = ratings.cache() if owned else ratings
+    train, probe = hash_split(rated)
     # Size the factor blocks to the data: every ALS iteration launches
     # O(blocks) tasks per side, so the default 10×10 grid pays pure
     # scheduling overhead on small inputs (4 blocks: 4.1 s → 1.4 s fit
-    # on the 24k-rating fixture). The count also materializes the
-    # cache before the iterative fit. ~250k ratings/block keeps block
+    # on the 24k-rating fixture). ~250k ratings/block keeps block
     # state comfortably in executor memory at any scale, capped at the
-    # session's parallelism.
-    n_train = train.count()
+    # session's parallelism. The same aggregate takes the training
+    # mean (the global-mean predictor) and materializes the cache.
+    stats = train.agg(F.count(F.lit(1)).alias("n"), F.avg("rating").alias("mu")).first()
     spark = train.sparkSession
     blocks = int(
-        min(max(4, n_train // 250_000), spark.sparkContext.defaultParallelism)
+        min(max(4, stats["n"] // 250_000), spark.sparkContext.defaultParallelism)
     )
     model = ALS(
         rank=rank,
@@ -138,20 +165,20 @@ def als_pipeline(
         numItemBlocks=blocks,
     ).fit(train)
 
-    # preds is consumed twice (RMSE here + the caller's own action) and
-    # its lineage re-runs randomSplit + transform each time — cache it
-    # and keep it cached for the caller.
-    preds = model.transform(probe).cache()
-    err = preds.select((F.col("rating") - F.col("prediction")).alias("err"))
-    rmse = err.agg(F.sqrt(F.avg(F.pow("err", F.lit(2))))).collect()[0][0]
-
-    mean = train.agg(F.avg("rating").alias("mu"))
-    base_err = probe.crossJoin(F.broadcast(mean)).select(
-        (F.col("rating") - F.col("mu")).alias("err")
-    )
-    base_rmse = base_err.agg(F.sqrt(F.avg(F.pow("err", F.lit(2))))).collect()[0][0]
-    train.unpersist()
-    return preds, float(rmse), float(base_rmse), model
+    # Both RMSEs in one aggregate over every probe row: cold-start rows
+    # score NaN, which the model's RMSE skips and the baseline counts.
+    scored = model.transform(probe, {model.coldStartStrategy: "nan"})
+    known = ~F.isnan("prediction")
+    m = scored.agg(
+        _rmse(F.when(known, F.col("rating") - F.col("prediction"))).alias("rmse"),
+        _rmse(F.col("rating") - F.lit(stats["mu"])).alias("base"),
+    ).first()
+    if owned:
+        rated.unpersist()
+    # callers consume the predictions more than once; cached lazily,
+    # so a caller that only wants the model and the RMSEs pays nothing
+    preds = scored.filter(known).cache()
+    return preds, float(m["rmse"]), float(m["base"]), model
 
 
 #: one fitted pipeline per SparkContext — q_als_fit_predict and
@@ -222,11 +249,17 @@ def pipeline_from_ratings(raw: DataFrame):
     above and the custom ratings_gen DataSource (sources/generator.py),
     proving any source that lands the ratings schema feeds the same
     dense-encode → split → fit → RMSE program."""
+    return als_pipeline(dense_encode(raw))
+
+
+def dense_encode(raw: DataFrame) -> DataFrame:
+    """§3.1 step 2 (A7, mapid.py): ``user_id``/``item_id`` replaced by
+    their dense ids."""
     from ..functions.ids import dense_ids
 
     umap = dense_ids(raw, "user_id").withColumnRenamed("dense_id", "u")
     imap = dense_ids(raw, "item_id").withColumnRenamed("dense_id", "i")
-    encoded = (
+    return (
         raw.join(umap, "user_id")
         .join(imap, "item_id")
         .select(
@@ -235,7 +268,6 @@ def pipeline_from_ratings(raw: DataFrame):
             "rating",
         )
     )
-    return als_pipeline(encoded)
 
 
 #: recommendations emitted per user
@@ -396,7 +428,9 @@ def q_als_rank_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ALS/ALS.java:423-433)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    ratings = synth_ratings(spark)
+    # the grid points share one cached input (each fit would otherwise
+    # cache and release its own copy of the same frame)
+    ratings = synth_ratings(spark).cache()
 
     def one_point(rank: int) -> tuple:
         _preds, rmse, base_rmse, _model = als_pipeline(
@@ -405,8 +439,11 @@ def q_als_rank_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         _preds.unpersist()
         return rank, round(rmse, 4), base_rmse
 
-    with ThreadPoolExecutor(max_workers=len(SWEEP_RANKS)) as pool:
-        results = list(pool.map(one_point, SWEEP_RANKS))
+    try:
+        with ThreadPoolExecutor(max_workers=len(SWEEP_RANKS)) as pool:
+            results = list(pool.map(one_point, SWEEP_RANKS))
+    finally:
+        ratings.unpersist()
     rows = [(rk, rm) for rk, rm, _ in results]
     base = results[0][2]
     best = min(rows, key=lambda r: (r[1], r[0]))[0]

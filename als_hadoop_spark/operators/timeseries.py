@@ -766,6 +766,29 @@ def q_acid_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tbl.snapshot(version=v1).select("o_orderkey", "o_custkey", "o_totalprice")
 
 
+def _wait_folded(
+    q, rollup, app_id: str, src_version: int, timeout: float = 300.0
+) -> None:
+    """Block until streaming query ``q`` has folded source version
+    ``src_version`` into ``rollup`` (its ``app_id`` txn watermark).
+    Re-raises the query's own failure; a wedged stream that neither
+    advances nor fails raises :class:`TimeoutError` naming its status
+    (an explicit raise, so ``python -O`` cannot turn it into an
+    endless spin)."""
+    import time
+
+    t0 = time.monotonic()
+    while rollup.last_txn(app_id) < src_version:
+        if q.exception() is not None:
+            raise q.exception()
+        if time.monotonic() - t0 >= timeout:
+            raise TimeoutError(
+                f"{app_id}: fold of source version {src_version} timed "
+                f"out after {timeout:g} s; query status: {q.status}"
+            )
+        time.sleep(0.05)
+
+
 def _latest_state(ev: DataFrame) -> DataFrame:
     """One row per user: the (event_type, value) of the user's latest
     event (ts, event_id total order) — the shared snapshot/changelog
@@ -1068,28 +1091,17 @@ def q_acid_stream_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mutation or both in one micro-batch — cannot change the result
     # (multi-version folds are the declared contract). The returned
     # frame is identical to the former two-AvailableNow-runs shape.
-    import time as _time
-
     q = stream_maintain_rollup(
         **step, trigger={"processingTime": "50 milliseconds"}
     )
     try:
         rt = AcidTable(spark, roll_path)
-
-        def wait_folded(src_version: int, timeout: float = 300.0) -> None:
-            t0 = _time.monotonic()
-            while rt.last_txn("stream_ivm") < src_version:
-                if q.exception() is not None:
-                    raise q.exception()
-                assert _time.monotonic() - t0 < timeout, (
-                    "acid_cdf stream fold timed out"
-                )
-                _time.sleep(0.05)
-
-        wait_folded(src.latest_version())  # bootstrap: replay of v0
+        # bootstrap: replay of v0
+        _wait_folded(q, rt, "stream_ivm", src.latest_version())
         src.merge(chg, "user_id", upsert, cdf=True)
         v_final = src.delete(F.col("state") == "click", cdf=True)
-        wait_folded(v_final)  # MERGE+DELETE folded (one or two batches)
+        # MERGE+DELETE folded (one or two batches)
+        _wait_folded(q, rt, "stream_ivm", v_final)
     finally:
         q.stop()
     q.awaitTermination(30)
@@ -1459,7 +1471,7 @@ ORACLES = {
     # the CDC sidecar contents derived relationally: update pairs only
     # where the merged row actually differs, inserts for new keys,
     # deletes for op='D' keys present in the snapshot — carried-over
-    # rows emit nothing (the exceptAll cancellation table_changes does)
+    # rows emit nothing (their signed counts cancel, as in table_changes)
     "q_acid_cdf": f"""
         WITH snap AS (
             SELECT user_id, event_type AS snap_state, value AS snap_value

@@ -371,6 +371,66 @@ def _merge_schema_jsons(jsons: list):
     return T.StructType([fields[n] for n in order])
 
 
+def _cdc_diff(
+    before: DataFrame, after: DataFrame, key: str | None = None
+) -> DataFrame:
+    """The multiset change set from ``before`` to ``after`` as ONE
+    signed-count aggregate, tagged in ``_change_type``: ``before`` rows
+    weigh -1 and ``after`` rows +1, identical rows sum their weights,
+    groups netting to 0 (carried over unchanged) drop out, and each
+    survivor is replicated |n| times — a delete when n < 0, an insert
+    when n > 0. This is the aggregate Spark rewrites ``exceptAll`` into
+    (same grouping, so NULL, NaN and -0.0 compare identically); one
+    aggregate serves both directions, so each side is scanned once.
+
+    With ``key``, a key holding both a deleted and an inserted net row
+    is an update: its rows are tagged update_preimage /
+    update_postimage. The per-key sign range is a window over the
+    aggregate's own ``key`` shuffle (no second exchange). A NULL key
+    never pairs — under SQL equality NULL equals no key, although the
+    window groups NULLs together — so its rows stay delete / insert.
+
+    ``after`` may add columns (additive schema evolution): ``before``
+    gets them as NULLs. The output has ``after``'s columns. Callers pass
+    only a commit's touched rows (rewritten or masked files and their
+    replacements), so the cost is proportional to the rewrite the
+    commit already paid for, never the table."""
+    cols = after.columns
+    types = dict(after.dtypes)
+    before = before.select(
+        [
+            F.col(c) if c in before.columns else F.lit(None).cast(types[c]).alias(c)
+            for c in cols
+        ]
+    )
+    n = "__acid_n"
+    signed = before.withColumn(n, F.lit(-1)).union(after.withColumn(n, F.lit(1)))
+    if key is not None:
+        signed = signed.repartition(key)
+    net = signed.groupBy(*cols).agg(F.sum(n).alias(n)).where(F.col(n) != 0)
+    gone = F.col(n) < 0
+    if key is None:
+        kind = F.when(gone, "delete").otherwise("insert")
+    else:
+        from pyspark.sql.window import Window
+
+        w = Window.partitionBy(key)
+        paired = (
+            F.col(key).isNotNull()
+            & (F.min(n).over(w) < 0)
+            & (F.max(n).over(w) > 0)
+        )
+        kind = F.when(
+            paired,
+            F.when(gone, "update_preimage").otherwise("update_postimage"),
+        ).otherwise(F.when(gone, "delete").otherwise("insert"))
+    return (
+        net.withColumn("_change_type", kind)
+        .withColumn(n, F.explode(F.array_repeat(F.lit(0), F.abs(n).cast("int"))))
+        .drop(n)
+    )
+
+
 def _empty_state() -> dict:
     return {
         "live": {},
@@ -1113,43 +1173,6 @@ class AcidTable:
             raise CommitConflict("table changed during overwrite")
         return base + 1
 
-    def _cdc_diff(self, before: DataFrame, after: DataFrame, key: str) -> DataFrame:
-        """Row-level change set between a commit's rewritten files:
-        multiset diff both ways (rows carried over unchanged cancel
-        out — no change emitted for them), then rows whose ``key``
-        appears on both sides pair up as update_preimage /
-        update_postimage; one-sided rows are delete / insert. Works
-        for ANY apply_fn that preserves (or additively extends) the
-        table schema; cost is one shuffle over the touched rows only —
-        proportional to the rewrite the merge already paid for, never
-        the table."""
-        for c in after.columns:
-            if c not in before.columns:
-                before = before.withColumn(
-                    c, F.lit(None).cast(dict(after.dtypes)[c])
-                )
-        before = before.select(after.columns)
-        gone = before.exceptAll(after)
-        born = after.exceptAll(before)
-        gone_keys = gone.select(key).distinct()
-        born_keys = born.select(key).distinct()
-        tag = "_change_type"
-        return (
-            gone.join(born_keys, key, "semi")
-            .withColumn(tag, F.lit("update_preimage"))
-            .unionByName(
-                gone.join(born_keys, key, "anti").withColumn(tag, F.lit("delete"))
-            )
-            .unionByName(
-                born.join(gone_keys, key, "semi").withColumn(
-                    tag, F.lit("update_postimage")
-                )
-            )
-            .unionByName(
-                born.join(gone_keys, key, "anti").withColumn(tag, F.lit("insert"))
-            )
-        )
-
     def _files_of(self, state: dict, rows: DataFrame) -> list[str]:
         """Table-relative names of the live files holding ``rows`` —
         the frame must carry the ``__acid_base`` helper column
@@ -1171,12 +1194,15 @@ class AcidTable:
         ``__acid_base``/``__acid_pos`` helper columns (rows to mask).
         Returns ``(sidecar rel paths, {data file rel path: n masked})``
         — empty when no row matched (the caller then commits no DV).
-        The per-file counts come from the caller's PERSISTED matched
-        frame (every DV writer persists it), not a read-back of the
-        just-staged sidecar — the sidecar write materializes the
-        persist, so the count is a tiny cached-data aggregate instead
-        of a parquet listing + schema + scan round trip (r12, guide
-        §5: two driver jobs off every DV commit)."""
+        When ``positions`` is persisted (every DV writer persists its
+        matched frame) the per-file counts come from it — the sidecar
+        write materializes the persist, so the count is a tiny
+        cached-data aggregate instead of a parquet listing + schema +
+        scan round trip (r12, guide §5: two driver jobs off every DV
+        commit). An unpersisted frame would be recomputed for the
+        count, and a nondeterministic upstream could then disagree
+        with the sidecar actually written, so its counts are read back
+        from the staged sidecar instead."""
         pos = positions.select(
             F.col("__acid_base").alias("file"),
             F.col("__acid_pos").cast("bigint").alias("pos"),
@@ -1192,6 +1218,10 @@ class AcidTable:
         sidecars = [a["path"] for a in adds]
         if not sidecars:
             return [], {}
+        if not positions.is_cached:
+            pos = self.spark.read.schema(_DV_SIDECAR_SCHEMA).parquet(
+                *[os.path.join(self.path, s) for s in sidecars]
+            )
         counts = {
             r["file"]: r["n"]
             for r in pos.groupBy("file")
@@ -1238,8 +1268,8 @@ class AcidTable:
         ``_acid_cdc/`` with the precise row-level change set (update
         pre/post pairing on ``key``) for ``table_changes`` readers —
         opt-in, like Delta's ``enableChangeDataFeed`` (the sidecar
-        costs one exceptAll diff over the touched rows plus a small
-        parquet write per merge). Without it, ``table_changes`` still
+        costs one signed-count aggregate over the touched rows plus a
+        small parquet write per merge). Without it, ``table_changes`` still
         derives insert/delete rows from the commit's add/remove files,
         losing only the update pairing.
 
@@ -1397,7 +1427,7 @@ class AcidTable:
             # diff the STAGED files (already on disk — no recompute of
             # the merge plan) against the rows of the replaced files
             after = self._read_staged(adds)
-            cdc = self._cdc_diff(touched_rows, after, key)
+            cdc = _cdc_diff(touched_rows, after, key)
             self._stage_cdc(cdc, entry)
         if txn is not None:
             entry["txn"] = txn
@@ -1479,7 +1509,7 @@ class AcidTable:
                     self._read_staged(adds) if adds
                     else matched_rows.limit(0)
                 )
-                cdc = self._cdc_diff(matched_rows, after, key)
+                cdc = _cdc_diff(matched_rows, after, key)
                 self._stage_cdc(cdc, entry)
             if txn is not None:
                 entry["txn"] = txn
@@ -2554,8 +2584,8 @@ class AcidTable:
             else:  # merge/delete/update without a CDC sidecar: derive
                 # the delete side is removed-file rows (copy-on-write)
                 # or DV-masked rows (merge-on-read) — same multiset
-                # semantics either way, so the exceptAll cancel below
-                # applies identically
+                # semantics either way, so the signed-count cancel
+                # below applies identically
                 if dv:
                     before = self._dv_masked_rows(v, entry)
                     if removes:
@@ -2566,22 +2596,7 @@ class AcidTable:
                 else:
                     before = self._read_files_at(v - 1, removes)
                 if adds:
-                    after = self._read_files_at(v, adds)
-                    for c in after.columns:
-                        if c not in before.columns:
-                            before = before.withColumn(
-                                c, F.lit(None).cast(dict(after.dtypes)[c])
-                            )
-                    before = before.select(after.columns)
-                    df = (
-                        before.exceptAll(after)
-                        .withColumn(tag, F.lit("delete"))
-                        .unionByName(
-                            after.exceptAll(before).withColumn(
-                                tag, F.lit("insert")
-                            )
-                        )
-                    )
+                    df = _cdc_diff(before, self._read_files_at(v, adds))
                 else:
                     df = before.withColumn(tag, F.lit("delete"))
             parts.append(df.withColumn("_commit_version", F.lit(v).cast("bigint")))

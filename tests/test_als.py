@@ -150,3 +150,32 @@ def test_rank_sweep_finds_latent_structure(spark):
     assert all(r["rmse"] < r["global_mean_rmse"] for r in rows.values())
     assert rows[min(SWEEP_RANKS)]["rmse"] > b["rmse"] * 1.5  # underfit visible
     assert b["rank"] != min(SWEEP_RANKS)
+
+
+def test_reference_pipeline_split_is_disjoint_and_repeatable(spark, tmp_path):
+    """The train/probe split of the dense-encoded CSV is decided per
+    rating, not per partition: its two sets are disjoint and cover the
+    input, and two reference_pipeline calls on one CSV fit the same
+    training set, so they return the same RMSE."""
+    from als_hadoop_spark.operators.als import dense_encode, hash_split, reference_pipeline
+    from als_hadoop_spark.sources import read_ratings_csv
+
+    path = str(tmp_path / "ratings.csv")
+    synth_ratings(spark, n_users=150, n_items=80, n_ratings=6000).selectExpr(
+        "user_id * 7 + 3 as user_id", "item_id * 11 + 5 as item_id", "rating"
+    ).write.option("header", "false").csv(path)
+    encoded = dense_encode(read_ratings_csv(spark, path))
+    train, probe = hash_split(encoded)
+    cells = lambda df: {(r[0], r[1]) for r in df.select("user_id", "item_id").collect()}  # noqa: E731
+    t, p, everything = cells(train), cells(probe), cells(encoded)
+    assert t and p and not (t & p)
+    assert t | p == everything
+    assert train.count() + probe.count() == encoded.count()
+
+    first = reference_pipeline(spark, path)
+    second = reference_pipeline(spark, path)
+    assert first[1] == second[1] and first[2] == second[2]
+    assert first[1] < first[2]
+    for preds, *_ in (first, second):
+        assert cells(preds) <= p
+        preds.unpersist()

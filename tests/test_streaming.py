@@ -1357,3 +1357,29 @@ def test_acid_cdf_cap_bounds_live_microbatches(spark, tmp_path):
         assert all(p["numInputRows"] <= 2 for p in data_batches)
     finally:
         q.stop()
+
+
+def test_wait_folded_raises_timeout_naming_status():
+    """A stream that neither folds nor fails ends in TimeoutError (not
+    an assert, which ``python -O`` strips), naming the query status;
+    the query's own failure is re-raised as is."""
+    from als_hadoop_spark.operators.timeseries import _wait_folded
+
+    class Stuck:
+        status = {"message": "Waiting for data to arrive"}
+        error = None
+
+        def exception(self):
+            return self.error
+
+    class Rollup:
+        def last_txn(self, app_id):
+            return 3
+
+    _wait_folded(Stuck(), Rollup(), "ivm", 3, timeout=0.01)  # already folded
+    with pytest.raises(TimeoutError, match="Waiting for data to arrive"):
+        _wait_folded(Stuck(), Rollup(), "ivm", 4, timeout=0.1)
+    q = Stuck()
+    q.error = RuntimeError("batch failed")
+    with pytest.raises(RuntimeError, match="batch failed"):
+        _wait_folded(q, Rollup(), "ivm", 4, timeout=5.0)
