@@ -26,6 +26,8 @@ node per iteration (``ALS/ALS.java:380-383``).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -98,6 +100,10 @@ TRAIN_FRACTION = 0.8
 SPLIT_SEED = 1
 
 
+def _in_train() -> F.Column:
+    return _hash_unit("user_id", "item_id", F.lit(SPLIT_SEED)) < TRAIN_FRACTION
+
+
 def hash_split(ratings: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The 0.8/0.2 train/probe split of split.py:5-19, decided per
     (user, item) cell by content hash rather than an RNG draw — the
@@ -108,12 +114,7 @@ def hash_split(ratings: DataFrame) -> tuple[DataFrame, DataFrame]:
     into training; a hash predicate assigns every row identically on
     every evaluation, so the two sets are disjoint and cover the
     input."""
-    train = _hash_unit("user_id", "item_id", F.lit(SPLIT_SEED)) < TRAIN_FRACTION
-    return ratings.filter(train), ratings.filter(~train)
-
-
-def _rmse(err: F.Column) -> F.Column:
-    return F.sqrt(F.avg(F.pow(err, F.lit(2))))
+    return ratings.filter(_in_train()), ratings.filter(~_in_train())
 
 
 def als_pipeline(
@@ -133,22 +134,34 @@ def als_pipeline(
     """
     from pyspark.ml.recommendation import ALS
 
-    # ONE scan of the input serves the split, the training-set
-    # statistics, the fit and the probe scoring (the reference instead
-    # re-reads HDFS SequenceFiles every iteration, ALS/ALS.java:312-327);
-    # released once both RMSEs are in — unless the caller cached it.
+    # ONE scan of the input serves the split, the split's statistics,
+    # the fit and the probe scoring (the reference instead re-reads
+    # HDFS SequenceFiles every iteration, ALS/ALS.java:312-327);
+    # released once the RMSE is in — unless the caller cached it.
     owned = not ratings.is_cached
     rated = ratings.cache() if owned else ratings
     train, probe = hash_split(rated)
+    # One aggregate materializes the cache and takes both sides'
+    # statistics: the training count and mean (the global-mean
+    # predictor) and the probe mean and variance, from which the
+    # baseline's RMSE follows without a pass of its own —
+    # mean((r - mu)^2) = var(r) + (mean(r) - mu)^2 over the probe rows.
+    in_train = _in_train()
+    rating = F.col("rating")
+    stats = rated.agg(
+        F.count(F.when(in_train, 1)).alias("n"),
+        F.avg(F.when(in_train, rating)).alias("mu"),
+        F.avg(F.when(~in_train, rating)).alias("probe_mean"),
+        F.var_pop(F.when(~in_train, rating)).alias("probe_var"),
+    ).first()
+    base_rmse = math.sqrt(stats["probe_var"] + (stats["probe_mean"] - stats["mu"]) ** 2)
     # Size the factor blocks to the data: every ALS iteration launches
     # O(blocks) tasks per side, so the default 10×10 grid pays pure
     # scheduling overhead on small inputs (4 blocks: 4.1 s → 1.4 s fit
     # on the 24k-rating fixture). ~250k ratings/block keeps block
     # state comfortably in executor memory at any scale, capped at the
-    # session's parallelism. The same aggregate takes the training
-    # mean (the global-mean predictor) and materializes the cache.
-    stats = train.agg(F.count(F.lit(1)).alias("n"), F.avg("rating").alias("mu")).first()
-    spark = train.sparkSession
+    # session's parallelism.
+    spark = rated.sparkSession
     blocks = int(
         min(max(4, stats["n"] // 250_000), spark.sparkContext.defaultParallelism)
     )
@@ -165,20 +178,15 @@ def als_pipeline(
         numItemBlocks=blocks,
     ).fit(train)
 
-    # Both RMSEs in one aggregate over every probe row: cold-start rows
-    # score NaN, which the model's RMSE skips and the baseline counts.
-    scored = model.transform(probe, {model.coldStartStrategy: "nan"})
-    known = ~F.isnan("prediction")
-    m = scored.agg(
-        _rmse(F.when(known, F.col("rating") - F.col("prediction"))).alias("rmse"),
-        _rmse(F.col("rating") - F.lit(stats["mu"])).alias("base"),
-    ).first()
+    # preds is consumed again by the caller; the RMSE aggregate fills
+    # its cache, which the caller keeps (and may unpersist).
+    preds = model.transform(probe).cache()
+    rmse = preds.agg(
+        F.sqrt(F.avg(F.pow(rating - F.col("prediction"), F.lit(2))))
+    ).first()[0]
     if owned:
         rated.unpersist()
-    # callers consume the predictions more than once; cached lazily,
-    # so a caller that only wants the model and the RMSEs pays nothing
-    preds = scored.filter(known).cache()
-    return preds, float(m["rmse"]), float(m["base"]), model
+    return preds, float(rmse), base_rmse, model
 
 
 #: one fitted pipeline per SparkContext — q_als_fit_predict and

@@ -1194,15 +1194,16 @@ class AcidTable:
         ``__acid_base``/``__acid_pos`` helper columns (rows to mask).
         Returns ``(sidecar rel paths, {data file rel path: n masked})``
         — empty when no row matched (the caller then commits no DV).
-        When ``positions`` is persisted (every DV writer persists its
-        matched frame) the per-file counts come from it — the sidecar
+        ``positions`` must be persisted (every DV writer persists its
+        matched frame): the per-file counts come from it — the sidecar
         write materializes the persist, so the count is a tiny
         cached-data aggregate instead of a parquet listing + schema +
         scan round trip (r12, guide §5: two driver jobs off every DV
         commit). An unpersisted frame would be recomputed for the
         count, and a nondeterministic upstream could then disagree
-        with the sidecar actually written, so its counts are read back
-        from the staged sidecar instead."""
+        with the sidecar actually written, so it is refused."""
+        if not positions.is_cached:
+            raise ValueError("_stage_dv needs a persisted positions frame")
         pos = positions.select(
             F.col("__acid_base").alias("file"),
             F.col("__acid_pos").cast("bigint").alias("pos"),
@@ -1218,10 +1219,6 @@ class AcidTable:
         sidecars = [a["path"] for a in adds]
         if not sidecars:
             return [], {}
-        if not positions.is_cached:
-            pos = self.spark.read.schema(_DV_SIDECAR_SCHEMA).parquet(
-                *[os.path.join(self.path, s) for s in sidecars]
-            )
         counts = {
             r["file"]: r["n"]
             for r in pos.groupBy("file")

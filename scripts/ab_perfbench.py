@@ -1,9 +1,11 @@
 """Interleaved A/B of two git revisions on the repo benchmark.
 
 Exports each revision with ``git archive`` into its own directory under
-``--work`` and runs ``perfbench/run.py`` from there, alternating the two
-revisions seed by seed (and the order within each pair), so that drift
-of a shared host lands on both sides alike. For every workload it prints
+``.ab_perfbench/`` and runs ``perfbench/run.py`` from there, alternating
+the two revisions seed by seed (and the order within each pair), so that
+drift of a shared host lands on both sides alike. Every workload of
+``BENCHMARK.json`` runs, at its ``run_seconds``, as the benchmark itself
+runs them. For every workload it prints
 each run's end-to-end metrics plus ``calib_s`` (the harness's fixed
 calibration job, a host-load gauge), the per-pair deltas, both medians,
 and the quartile spread of the base runs; a claim of a gain needs the
@@ -11,9 +13,8 @@ change to win most pairs and to move the median by more than that
 spread.
 
 Usage:
-    python scripts/ab_perfbench.py BASE HEAD [--workload W ...]
-        [--seeds 1 2 3 4] [--seconds 5] [--trace 0] [--work DIR]
-        [--log FILE]
+    python scripts/ab_perfbench.py BASE HEAD [--seeds 1 2 3 4]
+        [--trace 0] [--log FILE]
 
 ``BASE``/``HEAD`` are any git revisions; ``WORKTREE`` stands for the
 current checkout's tracked and untracked (not ignored) files. Each run
@@ -34,6 +35,7 @@ import tarfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WORK = os.path.join(ROOT, ".ab_perfbench")
 
 
 def export(rev: str, dest: str) -> None:
@@ -130,21 +132,18 @@ def main(argv: list[str]) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("base")
     ap.add_argument("head")
-    ap.add_argument("--workload", action="append", help="default: every workload in BENCHMARK.json")
     ap.add_argument("--seeds", type=int, nargs="+", default=[1, 2, 3, 4])
-    ap.add_argument("--seconds", type=float, default=None, help="default: run_seconds of BENCHMARK.json")
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--work", default=os.path.join(ROOT, ".ab_perfbench"))
     ap.add_argument("--log", default=None)
     args = ap.parse_args(argv)
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    workloads = args.workload or [w["name"] for w in bench["workloads"]]
-    seconds = args.seconds if args.seconds is not None else bench["run_seconds"]
+    workloads = [w["name"] for w in bench["workloads"]]
+    seconds = bench["run_seconds"]
     trees = {}
     for label, rev in (("base", args.base), ("head", args.head)):
-        trees[label] = os.path.join(args.work, label)
+        trees[label] = os.path.join(WORK, label)
         export(rev, trees[label])
     log = open(args.log, "a") if args.log else None
     print(f"base {args.base}, head {args.head}, seeds {args.seeds}, {seconds:g} s, trace {args.trace}")
@@ -172,7 +171,7 @@ def main(argv: list[str]) -> int:
     for workload in workloads:
         if pairs[workload]:
             print(report(workload, pairs[workload]))
-    shutil.rmtree(args.work, ignore_errors=True)
+    shutil.rmtree(WORK, ignore_errors=True)
     return 0
 
 

@@ -12,6 +12,7 @@ additively evolved schema.
 
 from __future__ import annotations
 
+import os
 from collections import Counter
 
 import pytest
@@ -221,24 +222,16 @@ def test_dv_table_changes_counts_per_commit(spark, tmp_path):
     )
 
 
-def test_stage_dv_counts_unpersisted_positions_from_sidecar(spark, tmp_path):
-    """_stage_dv takes its per-file counts from the positions frame only
-    when that frame is persisted. An unpersisted one is recomputed for
-    the count — here through a nondeterministic filter, so a recount
-    would pick other rows — and its counts must be read back from the
-    staged sidecar instead."""
+def test_stage_dv_refuses_unpersisted_positions(spark, tmp_path):
+    """_stage_dv takes its per-file counts from the positions frame, so
+    that frame must be persisted: an unpersisted one would be recomputed
+    for the count, and a nondeterministic upstream could then count
+    other rows than the sidecar holds. It is refused before anything is
+    staged."""
     t = AcidTable(spark, str(tmp_path / "t"))
     t.append(spark.range(2000).selectExpr("id AS k", "'v' AS v").coalesce(2))
     state = t._state()
-    coin = F.udf(lambda k: __import__("random").random() < 0.5, "boolean")
-    positions = t._assemble(state, with_pos=True).filter(
-        coin.asNondeterministic()("k")
-    )
-    sidecars, files = t._stage_dv(state, positions)
-    assert sidecars and not positions.is_cached
-    staged = (
-        spark.read.parquet(*[f"{t.path}/{s}" for s in sidecars])
-        .groupBy("file").count().collect()
-    )
-    base_to_rel = {f.rsplit("/", 1)[-1]: f for f in state["live"]}
-    assert files == {base_to_rel[r["file"]]: r["count"] for r in staged}
+    positions = t._assemble(state, with_pos=True)
+    with pytest.raises(ValueError, match="persisted"):
+        t._stage_dv(state, positions)
+    assert not os.path.exists(os.path.join(t.path, "_acid_dv"))
